@@ -331,9 +331,9 @@ def minhash_signatures(
     k-hash family inside higher-order lambdas is *interpreted* per element
     in Spark — 33M lambda evals took ~13s. Instead: ONE exploded pass
     computes a base hash per (doc, shingle) — codegen'd — and the k
-    hashes become k ``min()`` aggregate expressions over affine transforms
-    of the base hash (universal hashing) — also codegen'd, with map-side
-    partial aggregation. Same asymptotics, ~50× constant factor.
+    hashes are affine transforms of the base hash (universal hashing)
+    reduced per doc in one vectorized pass (:func:`_minhash_from_base`).
+    Same asymptotics, ~50× constant factor.
 
     ``base_hash="md5"`` (default) uses the engine-portable md5_long hash,
     making signatures — and everything derived from them — reproducible
@@ -375,26 +375,6 @@ def minhash_signatures_from_grams(
     return _minhash_from_base(base, num_hashes)
 
 
-# Signature-stage implementation knob (same escape-hatch convention as
-# matutil.STRATEGY). "arrow" won the round-7 interleaved A/B at sf0.1
-# (tools/ab_minhash_sig.py: 1.74 vs 2.17 s min, 1.81 vs 2.31 median,
-# identical signatures asserted) — the k min-agg buffers cost more in
-# codegen'd per-row agg updates than one vectorized numpy pass costs in
-# Arrow transfer. "codegen" remains for Python-worker-free deployments.
-SIG_IMPL = "arrow"
-
-
-def _sig_impl() -> str:
-    """Validated read of the SIG_IMPL knob — a typo'd override must fail
-    loudly, not silently measure/run the other implementation (same
-    contract as matutil.STRATEGY)."""
-    if SIG_IMPL not in ("fused", "arrow", "codegen"):
-        raise ValueError(
-            f"SIG_IMPL {SIG_IMPL!r}: use 'fused', 'arrow' or 'codegen'"
-        )
-    return SIG_IMPL
-
-
 def _arrow_exact_id(base: DataFrame):
     """Make the ``id`` column exact through the Arrow→pandas boundary.
 
@@ -424,12 +404,22 @@ def _minhash_from_base(base: DataFrame, num_hashes: int) -> DataFrame:
     # row — never an all-null signature that would spuriously bucket
     # with other gram-less docs downstream.
     base = base.filter(F.col("h").isNotNull())
-    # "fused" implies the Arrow partial stage for gram-fed callers too
-    # (fusion itself only exists on the from-docs entry point)
-    if _sig_impl() in ("arrow", "fused"):
-        prepared = _arrow_exact_id(base)
-        if prepared is not None:
-            return _minhash_from_base_arrow(prepared, num_hashes)
+    prepared = _arrow_exact_id(base)
+    if prepared is not None:
+        return _minhash_from_base_arrow(prepared, num_hashes)
+    return _minhash_codegen(base, num_hashes)
+
+
+def _minhash_codegen(base: DataFrame, num_hashes: int) -> DataFrame:
+    """JVM ``groupBy(id)`` of ``num_hashes`` min aggregates over
+    null-filtered (id, h) rows: the only path for id types
+    :func:`_arrow_exact_id` cannot round-trip, and the bit-identity
+    reference the Arrow reduce is tested against. It lost the
+    signature stage to the Arrow path at sf0.1 (r7: 2.17 vs 1.74 s
+    min, PERF.md; r12 reshaped the Arrow side again,
+    perf/ab_sig_combine_r12.json): the k min-agg buffers cost more in
+    per-row updates than one vectorized numpy pass costs in Arrow
+    transfer."""
     p = F.lit(MERSENNE31).cast("long")
     aggs = [
         F.min((F.col("h") * F.lit(a) + F.lit(b)) % p).alias(f"__m{i}")
@@ -464,10 +454,10 @@ def _minhash_from_base_arrow(prepared, num_hashes: int) -> DataFrame:
     rows of an id land in one partition (hash partitioning, nulls
     included), so per-task state is ONE 128-long carry row — memory is
     Arrow-batch-bounded at any scale, and the sort spills like any
-    shuffle sort. Signatures are bit-identical to the codegen variant
-    (min over int64 is order-free; asserted in tools/ab_minhash_sig.py
-    and by the q_dedup_minhash oracle). Products stay < 2^62 (h, a <
-    2^31), safe in int64. ``prepared`` comes from
+    shuffle sort. Signatures are bit-identical to
+    :func:`_minhash_codegen` (min over int64 is order-free; asserted in
+    tests/test_dedup.py and by the q_dedup_minhash oracle). Products
+    stay < 2^62 (h, a < 2^31), safe in int64. ``prepared`` comes from
     :func:`_arrow_exact_id` (string-typed id, caller's h already
     null-filtered)."""
     import numpy as np
@@ -519,25 +509,6 @@ def _minhash_from_base_arrow(prepared, num_hashes: int) -> DataFrame:
     return restore(sigs)
 
 
-def _combine_partials(partials: DataFrame, restore, num_hashes: int) -> DataFrame:
-    """Final (id → elementwise-min) combine shared by both Arrow paths.
-
-    The groupBy is what gives the Arrow paths the EXACT null-id
-    semantics of the codegen twin: SQL groupBy merges all NULL ids into
-    one group, so partial vectors from multiple null-id rows collapse
-    into one signature — per-row pandas stages need no null-id special
-    case as long as they emit partials and let this combine fold them."""
-    aggs = [
-        F.min(F.col("part")[i]).alias(f"__m{i}") for i in range(num_hashes)
-    ]
-    wide = partials.groupBy("id").agg(*aggs)
-    return restore(
-        wide.select(
-            "id", F.array(*[f"__m{i}" for i in range(num_hashes)]).alias("sig")
-        )
-    )
-
-
 def minhash_signatures_from_docs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -547,138 +518,22 @@ def minhash_signatures_from_docs(
     base_hash: str = "md5",
     short_docs: str = "whole",
 ) -> DataFrame:
-    """(id, sig) MinHash signatures straight from raw documents — the
-    FUSED Arrow path (round-8 A/B): tokenize → shingle → md5 → affine
-    partial-min all inside ONE mapInPandas over the raw (id, text)
-    rows, then the shared JVM combine.
+    """(id, sig) MinHash signatures straight from raw documents:
+    exploded_shingles(short_docs=...) → minhash_signatures_from_grams,
+    with that pipeline's contract corners — sub-n docs carry the
+    degenerate whole-text gram under ``short_docs="whole"``, null text
+    gets the per-id sentinel gram, a null-id null-text row contributes
+    the EMPTY gram to the null-id group (concat_ws skips the NULL
+    sentinel field and yields '', never NULL), and all null-id rows
+    merge into ONE signature.
 
-    Status after the r8 A/B (tools/ab_minhash_fused.py, interleaved
-    min-of-5 at sf0.1): **NOT the default** — the JVM gram pipeline +
-    Arrow partial ("arrow") won the signature stage 1.73 vs 4.36 s.
-    The hypothesis was that shipping 1 Arrow row per DOCUMENT instead
-    of per gram (~50×) would win; in practice the per-doc Python loop
-    (re.findall + per-gram " ".join + hashlib.md5 + int(hex,16)) costs
-    far more than the JVM's codegen'd explode+md5, and the Arrow
-    transfer it saves was never the bottleneck. A parallelism floor
-    (repartitioning the single-file doc scan) equalized the two at
-    ~1.36 s in isolation but LOST on the full pipelines (minhash 3.36
-    vs 2.41, simhash 3.22 vs 2.26 — extra shuffle + replanning), so
-    neither change shipped as default; receipts in PERF.md round 8.
-    The implementation stays available behind SIG_IMPL="fused" because
-    it is the only engine-independent reference for the full doc→sig
-    contract and its tests pin subtle corners of the JVM twin (the
-    concat_ws ''-gram for null-id null-text rows, the unicode
-    lowercase agreement, sentinel semantics).
-
-    Hash identity: the per-batch gram list is hashed with hashlib.md5
-    (bit-identical to Spark's md5: both hash UTF-8 bytes; the first
-    MD5_HEX_CHARS hex digits as int == md5_long's
-    conv(substring(md5(g),1,ch),16,10)); the affine min collapses via
-    one vectorized reduceat per batch. Tokenization is replicated
-    exactly: WORD_RE is pure ASCII ([A-Za-z0-9]+) and Python
-    str.lower() agrees with Spark lower() on every character that can
-    produce an ASCII alphanumeric (asserted over a unicode stress set
-    in tests/test_dedup.py).
-
-    Semantics are bit-identical to exploded_shingles(short_docs=...) →
-    minhash_signatures_from_grams, including the contract corners:
-    sub-n docs carry the degenerate whole-text gram (``short_docs=
-    "whole"``), null text gets the per-id sentinel gram, a null-id
-    null-text row contributes the EMPTY gram to the null-id group
-    (the JVM twin's concat_ws skips the NULL sentinel field and yields
-    '' — never NULL), and null-id partials merge into ONE signature
-    via the shared combine's SQL groupBy — all asserted against the
-    codegen twin.
-
-    Falls back to the two-stage path when the implementation knob says
-    so, when ``base_hash`` is not md5 (xxhash64 is JVM-internal — not
-    reproducible in the Python worker), or when the id type has no
-    exact string round-trip."""
-    fused_ok = _sig_impl() == "fused" and base_hash == "md5"
-    if fused_ok:
-        prepared = _arrow_exact_id(
-            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-        )
-        if prepared is not None:
-            return _minhash_from_docs_fused(prepared, n, num_hashes, short_docs)
+    Tokenizing, shingling and hashing stay in the JVM: a fused
+    mapInPandas doing all of it per document lost the signature stage
+    4.36 vs 1.73 s min at sf0.1 (perf/ab_minhash_fused_r8.json) — the
+    per-doc Python loop costs far more than the codegen'd explode+md5,
+    and the Arrow transfer it saved was never the bottleneck."""
     grams = exploded_shingles(df, id_col, text_col, n, short_docs=short_docs)
     return minhash_signatures_from_grams(grams, "id", "g", num_hashes, base_hash)
-
-
-def _minhash_from_docs_fused(
-    prepared, n: int, num_hashes: int, short_docs: str
-) -> DataFrame:
-    import hashlib
-    import re as _re
-
-    import numpy as np
-    import pandas as pd
-
-    base, restore = prepared
-    params = np.array(_affine_params(num_hashes), dtype=np.int64)
-    a, b = params[:, 0], params[:, 1]
-    word_re = _re.compile(WORD_RE)
-    whole = short_docs == "whole"
-
-    def fused(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["id"].to_numpy()
-            grams: list[str] = []
-            counts = np.zeros(len(pdf), dtype=np.int64)
-            for r, (id_, tx) in enumerate(zip(ids, pdf["text"])):
-                if tx is None or (isinstance(tx, float) and pd.isna(tx)):
-                    # null text under "whole": per-id sentinel gram.
-                    # With a null id the JVM twin's sentinel struct
-                    # field is NULL but concat_ws SKIPS nulls and
-                    # yields '' (never NULL) — so a (null id, null
-                    # text) row contributes the empty-string gram to
-                    # the merged null-id group, and the fused path
-                    # must reproduce exactly that
-                    if whole:
-                        grams.append(
-                            "\x00null:" + id_ if id_ is not None else ""
-                        )
-                        counts[r] = 1
-                    continue
-                toks = word_re.findall(tx.lower())
-                if len(toks) < n:
-                    if whole:
-                        grams.append(" ".join(toks))
-                        counts[r] = 1
-                    continue
-                k = len(toks) - n + 1
-                grams.extend(
-                    " ".join(toks[i : i + n]) for i in range(k)
-                )
-                counts[r] = k
-            if not grams:
-                continue
-            h = np.fromiter(
-                (
-                    int(
-                        hashlib.md5(g.encode("utf-8")).hexdigest()[
-                            :MD5_HEX_CHARS
-                        ],
-                        16,
-                    )
-                    % MERSENNE31
-                    for g in grams
-                ),
-                dtype=np.int64,
-                count=len(grams),
-            )
-            m = (h[:, None] * a + b) % MERSENNE31
-            keep = counts > 0
-            offsets = np.concatenate(
-                ([0], np.cumsum(counts[keep])[:-1])
-            ).astype(np.int64)
-            mins = np.minimum.reduceat(m, offsets, axis=0)
-            yield pd.DataFrame({"id": ids[keep], "part": list(mins)})
-
-    partials = base.mapInPandas(fused, "id string, part array<long>")
-    return _combine_partials(partials, restore, num_hashes)
 
 
 def banded_buckets(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
@@ -924,9 +779,9 @@ def simhash_signatures(
     reproduces signatures and Hamming distances exactly;
     ``"xxhash64"`` votes over 63 bits of the non-portable hash.
 
-    Same explode+aggregate design as minhash_signatures (codegen'd vote
-    sums, map-side combine) — per-bit voting inside higher-order lambdas
-    is interpreted and ~50× slower (measured)."""
+    Same explode + per-doc reduce design as minhash_signatures — per-bit
+    voting inside higher-order lambdas is interpreted and ~50× slower
+    (measured)."""
     if bits is None:
         bits = SIMHASH_BITS if base_hash == "md5" else 63
     base = df.select(
@@ -938,10 +793,18 @@ def simhash_signatures(
     # same null contract as _minhash_from_base (entry points already
     # filter null grams; this makes the primitive itself safe)
     base = base.filter(F.col("h").isNotNull())
-    if _sig_impl() in ("arrow", "fused"):
-        prepared = _arrow_exact_id(base)
-        if prepared is not None:
-            return _simhash_sigs_arrow(prepared, bits)
+    prepared = _arrow_exact_id(base)
+    if prepared is not None:
+        return _simhash_sigs_arrow(prepared, bits)
+    return _simhash_codegen(base, bits)
+
+
+def _simhash_codegen(base: DataFrame, bits: int) -> DataFrame:
+    """JVM ``groupBy(id)`` of ``bits`` vote sums over null-filtered
+    (id, h) rows, then a ``bits``-branch bit assembly: the only path
+    for id types :func:`_arrow_exact_id` cannot round-trip, and the
+    bit-identity reference the Arrow reduce is tested against (lost
+    the vote stage 5.20 vs 1.97 s median, perf/ab_simhash_sig_r12.json)."""
     aggs = [
         F.sum(
             F.when(F.col("h").bitwiseAND(F.lit(1 << i).cast("long")) != 0, 1).otherwise(-1)
@@ -979,8 +842,8 @@ def _simhash_sigs_arrow(prepared, bits: int) -> DataFrame:
     votes (order-free sums), arithmetic right-shift extracts
     two's-complement bits exactly like the JVM bitwiseAND path (the
     xxhash64 base hash can be negative), and bit weights stay in int64
-    (bit 62 max — ``bits`` ≤ 63). Signatures bit-identical to the
-    codegen variant (asserted in tools/ab_simhash_sig.py and by the
+    (bit 62 max — ``bits`` ≤ 63). Signatures bit-identical to
+    :func:`_simhash_codegen` (asserted in tests/test_dedup.py and by the
     q_dedup_simhash oracle). ``prepared`` comes from
     :func:`_arrow_exact_id` (string-typed id, h null-filtered by the
     caller)."""

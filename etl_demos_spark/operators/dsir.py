@@ -38,6 +38,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from etl_demos_spark.operators.matutil import materialize_reused
+
 _UNATS = 1_000_000          # micro-nat quantization of log-ratios
 _TWO52 = float(1 << 52)     # 52-bit uniform: exact in double arithmetic
 
@@ -166,7 +168,6 @@ def dsir_select(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_buckets: int = 2048,
-    materialize: str = "checkpoint",
 ) -> DataFrame:
     """End-to-end DSIR: features → distributions → exact scores →
     Gumbel top-k. Returns the k selected (id, score_unats, rn), rn by
@@ -175,32 +176,12 @@ def dsir_select(
     stays internal.
 
     The feature table is consumed three times (target agg, raw agg,
-    scoring join), so it is materialized. Default is eager
-    localCheckpoint, not persist(): on the realistic sf0.1 documents
-    corpus the r6 interleaved A/B (5 sweeps) measures none 3.07 /
-    persist 5.00 / localCheckpoint 2.20 s medians — building the
-    columnar in-memory cache of a DIVERSE exploded feature table costs
-    more than the query saves, while the checkpoint's raw-block write
-    is cheap and truncates the plan; persist() also leaks a
-    CacheManager entry per call (no unpersist point). The ranking
-    FLIPS on highly compressible features: on the 1M-doc stress corpus
-    (40 distinct texts, RLE-friendly) the same interleaved A/B gives
-    persist 3.79 / checkpoint 5.73 s — columnar cache compression wins
-    when the feature table is redundant. ``materialize``
-    ("checkpoint" | "persist" | "none") exposes the choice; real
-    corpora look like the former. At corpus scale you would checkpoint
-    features to parquet instead."""
+    scoring join), so it is checkpointed (matutil: persist 5.00 vs
+    checkpoint 2.20 s medians on the sf0.1 documents corpus). At
+    corpus scale you would checkpoint features to parquet instead."""
     from pyspark.sql import Window as W
 
-    feats = hashed_ngram_features(df, text_col, id_col, n_buckets)
-    if materialize == "checkpoint":
-        feats = feats.localCheckpoint(eager=True)
-    elif materialize == "persist":
-        feats = feats.persist()
-    elif materialize != "none":
-        raise ValueError(
-            f"materialize {materialize!r} not in checkpoint/persist/none"
-        )
+    feats = materialize_reused(hashed_ngram_features(df, text_col, id_col, n_buckets))
     ratios = dsir_log_ratios(feats, target, id_col, n_buckets)
     scores = dsir_scores(feats, ratios, id_col)
     key = gumbel_key(

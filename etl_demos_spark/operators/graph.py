@@ -239,16 +239,6 @@ def pagerank(
             # two consumers re-analyze the compounding plan, so lineage
             # must stay one round deep)
         )
-    # The returned ranks is itself checkpointed, so releasing the
-    # intermediates is safe. Under the default checkpoint strategy
-    # unpersist() is a no-op (blocks free via ContextCleaner on GC);
-    # it exists for the matutil STRATEGY="persist" A/B arm, where
-    # skipping it would leak three CacheManager entries per call and
-    # bias the very comparison the knob exists to make fair.
-    ed.unpersist()
-    deg.unpersist()
-    nodes.unpersist()
-    e.unpersist()
     return ranks
 
 
@@ -365,10 +355,6 @@ def flatten_hierarchy(
         .cast("long")
         .alias("depth"),
     ).localCheckpoint()
-    # the initial state is checkpointed, so the materialized nodes frame
-    # is releasable (no-op under the checkpoint strategy; keeps the
-    # matutil persist A/B arm from leaking one cache entry per call)
-    nodes.unpersist()
     for _ in range(max_iter):
         hop = state.select(
             F.col("node").alias("_n2"),
@@ -505,8 +491,6 @@ def label_propagation(
                     }
                 )
 
-        # no unpersist here: the returned frame still reads und lazily;
-        # checkpoint blocks free via GC once the caller drops it
         return und.coalesce(1).mapInPandas(
             run, f"node {node_t}, community {node_t}"
         )
@@ -535,9 +519,6 @@ def label_propagation(
             .select("node", "community")
             .localCheckpoint(eager=True)  # truncate per-round lineage
         )
-    # labels is checkpointed; unpersist is a no-op on the default
-    # checkpoint strategy and frees the persist A/B arm's cache entry
-    und.unpersist()
     return labels
 
 
@@ -698,7 +679,4 @@ def bfs_distances(
             break
         dist = dist.unionByName(new)
         frontier = new
-    # dist's union plan references only checkpointed deltas, so und is
-    # releasable; no-op on the default strategy, frees the persist arm
-    und.unpersist()
     return dist

@@ -176,6 +176,8 @@ def _phash_batch(grids):
     included). Bit weights stay in int64 (bit ≤ 62)."""
     import numpy as np
 
+    # DCT_T is 8x8: the pHash grid must not follow the dHash GRID_H
+    assert grids.shape[1:] == (8, 8), grids.shape
     t = np.array(DCT_T, dtype=np.int64)
     c = t @ grids @ t.T  # (n, 8, 8), exact int64
     vals = c.reshape(len(grids), 64)[:, 1:]  # AC coeffs; bit = column

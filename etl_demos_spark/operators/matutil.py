@@ -1,56 +1,37 @@
-"""Materialization strategy for multi-consumer / per-iteration frames.
+"""Materialization of multi-consumer / per-iteration frames.
 
-The round-6 measurements (PERF.md) settled a repo-wide question: a
-frame consumed a handful of times inside one operator call should be
-eagerly ``localCheckpoint``'d, not ``persist()``'d —
+A frame consumed a handful of times inside one operator call is
+``localCheckpoint``'d, never ``persist()``'d. The round-6 interleaved
+A/Bs (PERF.md, "Round-6" sections) settled it:
 
-- ``persist()`` builds a COLUMNAR compressed in-memory cache; for
-  diverse intermediate tables the build costs more than it saves
-  (q_gap_fill: persist +48% vs recompute; dsir features: persist 5.00 s
-  vs checkpoint 2.20 s medians, interleaved), and with no unpersist
+- ``persist()`` builds a COLUMNAR compressed in-memory cache, and for
+  diverse intermediate tables the build costs more than it saves:
+  q_gap_fill persist 0.641 vs checkpoint 0.451 s median (recompute
+  0.455), dsir features persist 5.00 vs checkpoint 2.20 s, q_pagerank
+  11.00 vs 4.40 s, q_label_prop 7.35 vs 5.57 s. With no unpersist
   point (the returned lazy frame references the intermediate) every
-  call leaks a CacheManager entry that driver GC never frees.
-- ``localCheckpoint(eager=True)`` writes raw blocks (cheap), truncates
-  the plan (keeps iterative lineage linear), and its blocks are freed
-  by the ContextCleaner when the frame is garbage collected.
+  call also leaks a CacheManager entry that driver GC never frees.
+- ``localCheckpoint`` writes raw blocks (cheap), truncates the plan
+  (keeps iterative lineage linear), and its blocks are freed by the
+  ContextCleaner when the frame is garbage collected.
 
-The one measured exception: HIGHLY REDUNDANT tables (the 1M-doc stress
-corpus with 40 distinct texts) where columnar RLE compression flips the
-ranking — operators expose a ``materialize=`` knob where that regime is
-plausible (dsir_select, resample_locf).
+Persist won only on pathologically compressible tables (a 1M-doc
+corpus of 40 distinct texts) and on large many-times-reread ones (BFS
+at 2M nodes, ~6%); real corpora at the measured scales sit on the
+checkpoint side.
 
-``materialize_reused`` is the shared entry point so an interleaved A/B
-harness (see the inline scripts documented in PERF.md round-6) can swap
-the strategy process-wide without touching operators. Valid strategies:
-``checkpoint`` (default, eager), ``checkpoint_lazy`` (plan truncation
-without the upfront job — first consumer pays it; measured no better
-than eager on the simhash case), ``persist``, ``none`` (recompute per
-consumer). NOT for sites where materialization is a correctness
-requirement (e.g. the CSV corrupt-record read) — those call
-localCheckpoint directly so "none" cannot break them.
+Sites where materialization is a correctness requirement (the CSV
+corrupt-record read) call ``localCheckpoint`` directly.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-#: swapped process-wide by A/B harnesses; operators call materialize_reused
-STRATEGY = "checkpoint"
-
-_VALID = ("checkpoint", "checkpoint_lazy", "persist", "none")
-
 
 def materialize_reused(df: DataFrame) -> DataFrame:
     """Materialize a frame that is consumed multiple times within one
     operator call (or once per iteration round)."""
-    if STRATEGY == "persist":
-        return df.persist()
-    if STRATEGY == "none":
-        return df
-    if STRATEGY == "checkpoint_lazy":
-        return df.localCheckpoint(eager=False)
-    if STRATEGY != "checkpoint":
-        raise ValueError(f"matutil.STRATEGY {STRATEGY!r} not in {_VALID}")
     return df.localCheckpoint(eager=True)
 
 
@@ -61,17 +42,6 @@ def materialize_stats(df: DataFrame, *aggs):
     (graph.py, embedding_dedup.py) cost zero extra jobs — previously an
     eager checkpoint job plus a dedicated ``count()`` job per operator
     call (VERDICT r11 rec 7). Returns ``(materialized_df, Row)`` where
-    Row holds the requested aggregates.
-
-    Strategy-aware like :func:`materialize_reused`: under ``persist``
-    the agg populates the cache, under ``none`` the agg is one extra
-    execution of the plan (the documented recompute arm)."""
-    if STRATEGY == "persist":
-        out = df.persist()
-    elif STRATEGY == "none":
-        out = df
-    elif STRATEGY in ("checkpoint", "checkpoint_lazy"):
-        out = df.localCheckpoint(eager=False)
-    else:
-        raise ValueError(f"matutil.STRATEGY {STRATEGY!r} not in {_VALID}")
+    Row holds the requested aggregates."""
+    out = df.localCheckpoint(eager=False)
     return out, out.agg(*aggs).collect()[0]

