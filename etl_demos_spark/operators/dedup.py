@@ -24,8 +24,10 @@ shingle/band/chunk keys, never a cross join.
 
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+from pyspark.sql import types as T
 
 from etl_demos_spark.operators.matutil import materialize_reused
 from etl_demos_spark.operators.text import WORD_RE, fingerprint
@@ -375,26 +377,72 @@ def minhash_signatures_from_grams(
     return _minhash_from_base(base, num_hashes)
 
 
-def _arrow_exact_id(base: DataFrame):
-    """Make the ``id`` column exact through the Arrow→pandas boundary.
+def _arrow_groups_ids(base: DataFrame) -> bool:
+    """Whether Arrow value equality groups ``id`` exactly like Spark's
+    ``groupBy``. It does not for float/double (Spark merges NaNs and
+    -0.0 with 0.0), nested types, or non-binary string collations;
+    those ids take the codegen path."""
+    t = base.schema["id"].dataType
+    if isinstance(t, T.StringType):
+        return t.isUTF8BinaryCollation()
+    return not isinstance(t, (T.FloatType, T.DoubleType, T.ArrayType, T.MapType, T.StructType))
 
-    pandas materializes a nullable int64 column as float64 — one null id
-    anywhere in an Arrow batch silently rounds every id ≥ 2^53 in that
-    batch (verified: 2^53+1 arrives as ...992.0). Integral ids therefore
-    round-trip through STRING for the partial stage (exact for all
-    int64), restored to the original type after the final combine;
-    string ids pass through. Returns (prepared_base, restore_fn), or
-    None for id types with no exact string round-trip — the caller
-    falls back to the codegen implementation."""
-    id_type = dict(base.dtypes)["id"]
-    if id_type == "string":
-        return base, (lambda df: df)
-    if id_type in ("bigint", "int", "smallint", "tinyint"):
-        return (
-            base.withColumn("id", F.col("id").cast("string")),
-            lambda df: df.withColumn("id", F.col("id").cast(id_type)),
-        )
-    return None
+
+def _reduce_id_runs(base: DataFrame, transform, fold, finish, sig_type) -> DataFrame:
+    """(id, sig) from null-filtered (id, h) rows in one ``mapInArrow``
+    pass over id-sorted partitions: the MinHash and SimHash reducer.
+
+    ``repartition("id")`` co-locates every id's rows (hash partitioning,
+    nulls included) and ``sortWithinPartitions("id")`` makes them
+    contiguous, nulls first. Per Arrow batch, ``transform`` maps the
+    int64 ``h`` column to an (n, k) int64 matrix, ``fold.reduceat``
+    folds it per id run, and ``finish`` turns the (runs, k) result into
+    the ``sig`` Arrow array. Run bounds come from ``run_end_encode`` of
+    the id column, which makes the null ids one run. A batch can only
+    continue the previous batch's last id, so the task carries one run,
+    its id a length-1 Arrow slice compared with ``Array.equals`` (null
+    equals null). Memory is batch-bounded at any scale and the sort
+    spills like any shuffle sort. Ids keep their Arrow type end to end,
+    so int64 ids ≥ 2^53 stay exact next to null ids.
+
+    ``fold`` must be order-free (min, integer add): signatures are then
+    bit-identical to :func:`_minhash_codegen` / :func:`_simhash_codegen`
+    (asserted in tests/test_dedup.py and by the q_dedup_minhash and
+    q_dedup_simhash oracles). Receipts: perf/ab_sig_combine_r12.json
+    (one sorted pass beats per-batch partials plus a k-aggregate JVM
+    combine, whose plan costs more to analyze and codegen than the
+    stage computes) and perf/ab_sig_arrow_r13.json (Arrow batches vs
+    pandas batches)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    schema = T.StructType().add("id", base.schema["id"].dataType).add("sig", sig_type)
+
+    def emit(ids, folded):
+        return pa.RecordBatch.from_arrays([ids, finish(folded)], ["id", "sig"])
+
+    def reduce_runs(batches):
+        carry_id = carry = None
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            runs = pc.run_end_encode(batch.column("id"))
+            ids, ends = runs.values, runs.run_ends.to_numpy()
+            m = transform(batch.column("h").to_numpy())
+            folded = fold.reduceat(m, np.r_[0, ends[:-1]], axis=0)
+            if carry_id is not None:
+                if ids.slice(0, 1).equals(carry_id):
+                    folded[0] = fold(folded[0], carry)
+                else:
+                    ids = pa.concat_arrays([carry_id, ids])
+                    folded = np.concatenate([carry[None], folded])
+            yield emit(ids.slice(0, len(ids) - 1), folded[:-1])
+            carry_id, carry = ids.slice(len(ids) - 1), folded[-1]
+        if carry_id is not None:
+            yield emit(carry_id, carry[None])
+
+    clustered = base.repartition("id").sortWithinPartitions("id")
+    return clustered.mapInArrow(reduce_runs, schema)
 
 
 def _minhash_from_base(base: DataFrame, num_hashes: int) -> DataFrame:
@@ -404,22 +452,32 @@ def _minhash_from_base(base: DataFrame, num_hashes: int) -> DataFrame:
     # row — never an all-null signature that would spuriously bucket
     # with other gram-less docs downstream.
     base = base.filter(F.col("h").isNotNull())
-    prepared = _arrow_exact_id(base)
-    if prepared is not None:
-        return _minhash_from_base_arrow(prepared, num_hashes)
-    return _minhash_codegen(base, num_hashes)
+    if not _arrow_groups_ids(base):
+        return _minhash_codegen(base, num_hashes)
+    import pyarrow as pa
+
+    a, b = np.array(_affine_params(num_hashes), dtype=np.int64).T
+    # products stay < 2^62 (h, a < 2^31): exact in int64
+    return _reduce_id_runs(
+        base,
+        lambda h: (h[:, None] * a + b) % MERSENNE31,
+        np.minimum,
+        lambda m: pa.ListArray.from_arrays(
+            np.arange(len(m) + 1, dtype=np.int32) * num_hashes, m.ravel()
+        ),
+        T.ArrayType(T.LongType()),
+    )
 
 
 def _minhash_codegen(base: DataFrame, num_hashes: int) -> DataFrame:
     """JVM ``groupBy(id)`` of ``num_hashes`` min aggregates over
-    null-filtered (id, h) rows: the only path for id types
-    :func:`_arrow_exact_id` cannot round-trip, and the bit-identity
-    reference the Arrow reduce is tested against. It lost the
-    signature stage to the Arrow path at sf0.1 (r7: 2.17 vs 1.74 s
-    min, PERF.md; r12 reshaped the Arrow side again,
-    perf/ab_sig_combine_r12.json): the k min-agg buffers cost more in
-    per-row updates than one vectorized numpy pass costs in Arrow
-    transfer."""
+    null-filtered (id, h) rows: the path for ids Arrow cannot group
+    (:func:`_arrow_groups_ids`), and the bit-identity reference the
+    Arrow reduce is tested against. It lost the signature stage to the
+    Arrow reduce at sf0.1 (r7: 2.17 vs 1.74 s min, PERF.md; reshaped
+    since, perf/ab_sig_combine_r12.json): the k min-agg buffers cost
+    more in per-row updates than one vectorized numpy pass costs in
+    Arrow transfer."""
     p = F.lit(MERSENNE31).cast("long")
     aggs = [
         F.min((F.col("h") * F.lit(a) + F.lit(b)) % p).alias(f"__m{i}")
@@ -429,84 +487,6 @@ def _minhash_codegen(base: DataFrame, num_hashes: int) -> DataFrame:
     return wide.select(
         "id", F.array(*[f"__m{i}" for i in range(num_hashes)]).alias("sig")
     )
-
-
-def _minhash_from_base_arrow(prepared, num_hashes: int) -> DataFrame:
-    """Arrow signature reduction over id-clustered gram rows — one
-    shuffle, no wide JVM aggregate (r12 rework, profiled in
-    perf/ab_sig_combine_r12.json).
-
-    The previous shape (per-batch partial minima + a JVM
-    groupBy(id).agg of ``num_hashes`` array-element mins) spent most of
-    its wall NOT moving or reducing data but in the 128-aggregate
-    combine plan itself (259-expression analysis/codegen per
-    invocation: measured ~1.5-3 s of a ~3-4 s stage at sf0.1, against
-    ~0.5 s of actual partial computation). Both shapes pay exactly ONE
-    shuffle of comparable volume (partial rows are ~1 KB x n_ids x
-    n_partitions vs 25 B x n_grams here, a wash at ~50 grams/doc), so
-    the combine bought nothing the repartition doesn't.
-
-    New shape: hash-repartition the narrow (id, h) rows by id (16 B +
-    id bytes per row), sort within partitions, then ONE mapInPandas
-    pass emits FINAL signatures: within a sorted partition every id's
-    grams are contiguous, so per-id minima are one np.minimum.reduceat
-    per batch plus a carried boundary row merged across batches. All
-    rows of an id land in one partition (hash partitioning, nulls
-    included), so per-task state is ONE 128-long carry row — memory is
-    Arrow-batch-bounded at any scale, and the sort spills like any
-    shuffle sort. Signatures are bit-identical to
-    :func:`_minhash_codegen` (min over int64 is order-free; asserted in
-    tests/test_dedup.py and by the q_dedup_minhash oracle). Products
-    stay < 2^62 (h, a < 2^31), safe in int64. ``prepared`` comes from
-    :func:`_arrow_exact_id` (string-typed id, caller's h already
-    null-filtered)."""
-    import numpy as np
-    import pandas as pd
-
-    base, restore = prepared
-    params = np.array(_affine_params(num_hashes), dtype=np.int64)
-    a, b = params[:, 0], params[:, 1]
-
-    # repartition("id") sizes itself from spark.sql.shuffle.partitions
-    # (scale-adaptive via session.py) and co-locates every id's grams;
-    # the sort makes them contiguous so the reducer below can stream.
-    clustered = base.repartition("id").sortWithinPartitions("id")
-
-    _missing = object()  # null id is a real group — can't use None
-
-    def reduce_sorted(batches):
-        carry_id, carry_min = _missing, None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # h is null-filtered JVM-side, so pandas delivers exact
-            # int64 (a null anywhere would flip the column to float64)
-            h = pdf["h"].to_numpy(dtype=np.int64)
-            m = (h[:, None] * a + b) % MERSENNE31
-            ids = pdf["id"].to_numpy()
-            bounds = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
-            mins = np.minimum.reduceat(m, bounds, axis=0)
-            run_ids = ids[bounds]
-            if carry_id is not _missing:
-                # ids are sorted within the partition, so a batch can
-                # only continue the PREVIOUS batch's last id (None ==
-                # None is True for the null group)
-                if run_ids[0] == carry_id or (
-                    run_ids[0] is None and carry_id is None
-                ):
-                    mins[0] = np.minimum(mins[0], carry_min)
-                else:
-                    yield pd.DataFrame({"id": [carry_id], "sig": [carry_min]})
-            if len(run_ids) > 1:
-                yield pd.DataFrame(
-                    {"id": run_ids[:-1], "sig": list(mins[:-1])}
-                )
-            carry_id, carry_min = run_ids[-1], mins[-1]
-        if carry_id is not _missing:
-            yield pd.DataFrame({"id": [carry_id], "sig": [carry_min]})
-
-    sigs = clustered.mapInPandas(reduce_sorted, "id string, sig array<long>")
-    return restore(sigs)
 
 
 def minhash_signatures_from_docs(
@@ -528,7 +508,7 @@ def minhash_signatures_from_docs(
     merge into ONE signature.
 
     Tokenizing, shingling and hashing stay in the JVM: a fused
-    mapInPandas doing all of it per document lost the signature stage
+    Python UDF pass doing all of it per document lost the signature stage
     4.36 vs 1.73 s min at sf0.1 (perf/ab_minhash_fused_r8.json) — the
     per-doc Python loop costs far more than the codegen'd explode+md5,
     and the Arrow transfer it saved was never the bottleneck."""
@@ -793,18 +773,29 @@ def simhash_signatures(
     # same null contract as _minhash_from_base (entry points already
     # filter null grams; this makes the primitive itself safe)
     base = base.filter(F.col("h").isNotNull())
-    prepared = _arrow_exact_id(base)
-    if prepared is not None:
-        return _simhash_sigs_arrow(prepared, bits)
-    return _simhash_codegen(base, bits)
+    if not _arrow_groups_ids(base):
+        return _simhash_codegen(base, bits)
+    # ±1 votes per bit, summed per id; the arithmetic right shift reads
+    # two's-complement bits like the JVM bitwiseAND (xxhash64 can be
+    # negative) and the bit weights stay in int64 (bits ≤ 63)
+    shifts = np.arange(bits, dtype=np.int64)
+    weights = np.int64(1) << shifts
+    return _reduce_id_runs(
+        base,
+        lambda h: ((h[:, None] >> shifts) & 1) * 2 - 1,
+        np.add,
+        lambda votes: (votes > 0) @ weights,
+        T.LongType(),
+    )
 
 
 def _simhash_codegen(base: DataFrame, bits: int) -> DataFrame:
     """JVM ``groupBy(id)`` of ``bits`` vote sums over null-filtered
-    (id, h) rows, then a ``bits``-branch bit assembly: the only path
-    for id types :func:`_arrow_exact_id` cannot round-trip, and the
-    bit-identity reference the Arrow reduce is tested against (lost
-    the vote stage 5.20 vs 1.97 s median, perf/ab_simhash_sig_r12.json)."""
+    (id, h) rows, then a ``bits``-branch bit assembly: the path for ids
+    Arrow cannot group (:func:`_arrow_groups_ids`), and the
+    bit-identity reference the Arrow reduce is tested against. Its
+    ``bits``-aggregate plan lost the vote stage to the Arrow reduce
+    5.20 vs 1.97 s median (perf/ab_simhash_sig_r12.json)."""
     aggs = [
         F.sum(
             F.when(F.col("h").bitwiseAND(F.lit(1 << i).cast("long")) != 0, 1).otherwise(-1)
@@ -826,71 +817,6 @@ def _simhash_codegen(base: DataFrame, bits: int) -> DataFrame:
             "sig"
         ),
     )
-
-
-def _simhash_sigs_arrow(prepared, bits: int) -> DataFrame:
-    """Arrow SimHash over id-clustered gram rows — the
-    :func:`_minhash_from_base_arrow` r12 shape: hash-repartition the
-    narrow (id, h) rows by id, sort within partitions, then ONE
-    mapInPandas pass sums the ±1 vote matrix per contiguous id run
-    (np.add.reduceat, one carried boundary row across batches) and
-    assembles the FINAL signature long in numpy. Replaces the previous
-    per-batch partial votes + ``bits``-aggregate JVM combine +
-    ``bits``-branch bit assembly, whose 120+-expression plan cost more
-    in analysis/codegen than the stage's actual compute (measured on
-    the minhash twin, perf/ab_sig_combine_r12.json). Exact-integer
-    votes (order-free sums), arithmetic right-shift extracts
-    two's-complement bits exactly like the JVM bitwiseAND path (the
-    xxhash64 base hash can be negative), and bit weights stay in int64
-    (bit 62 max — ``bits`` ≤ 63). Signatures bit-identical to
-    :func:`_simhash_codegen` (asserted in tests/test_dedup.py and by the
-    q_dedup_simhash oracle). ``prepared`` comes from
-    :func:`_arrow_exact_id` (string-typed id, h null-filtered by the
-    caller)."""
-    import numpy as np
-    import pandas as pd
-
-    base, restore = prepared
-    shifts = np.arange(bits, dtype=np.int64)
-    weights = np.int64(1) << shifts
-
-    clustered = base.repartition("id").sortWithinPartitions("id")
-
-    _missing = object()  # null id is a real group — can't use None
-
-    def _sig(votes):
-        return (votes > 0) @ weights
-
-    def reduce_sorted(batches):
-        carry_id, carry_votes = _missing, None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # h null-filtered JVM-side → exact int64 in pandas (a null
-            # would flip the column to float64 and corrupt ≥2^53 hashes)
-            h = pdf["h"].to_numpy(dtype=np.int64)
-            m = ((h[:, None] >> shifts) & 1) * 2 - 1
-            ids = pdf["id"].to_numpy()
-            bounds = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
-            sums = np.add.reduceat(m, bounds, axis=0)
-            run_ids = ids[bounds]
-            if carry_id is not _missing:
-                if run_ids[0] == carry_id or (
-                    run_ids[0] is None and carry_id is None
-                ):
-                    sums[0] += carry_votes
-                else:
-                    yield pd.DataFrame(
-                        {"id": [carry_id], "sig": [_sig(carry_votes)]}
-                    )
-            if len(run_ids) > 1:
-                yield pd.DataFrame({"id": run_ids[:-1], "sig": _sig(sums[:-1])})
-            carry_id, carry_votes = run_ids[-1], sums[-1]
-        if carry_id is not _missing:
-            yield pd.DataFrame({"id": [carry_id], "sig": [_sig(carry_votes)]})
-
-    sigs = clustered.mapInPandas(reduce_sorted, "id string, sig long")
-    return restore(sigs)
 
 
 def hamming64(a: Column, b: Column) -> Column:

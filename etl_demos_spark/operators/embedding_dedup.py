@@ -200,8 +200,7 @@ def cosine_pairs_tiled(
 # whole (deduped) edge list fits one executor task with room to spare
 # (5M edges ≈ 80 MB of int64 pairs), and min-label propagation over
 # numpy arrays beats 3-6 distributed rounds by an order of magnitude.
-# Above it, the iterative DataFrame loop is the 100 TB path. Override
-# per deployment via env (scale-adaptive, not a local[32] constant).
+# Above it, the iterative DataFrame loop is the 100 TB path.
 CC_SINGLE_TASK_EDGE_CAP = 5_000_000
 
 
@@ -267,12 +266,8 @@ def connected_components(
 
     Both paths are exact and identical in output (pinned against each
     other in tests/test_dedup.py)."""
-    import os
-
     if single_task_edge_cap is None:
-        single_task_edge_cap = int(
-            os.environ.get("ETL_CC_SINGLE_TASK_EDGE_CAP", CC_SINGLE_TASK_EDGE_CAP)
-        )
+        single_task_edge_cap = CC_SINGLE_TASK_EDGE_CAP
     edges = pairs.select(
         F.col(id_a).alias("u"), F.col(id_b).alias("v")
     ).filter(F.col("u") != F.col("v"))

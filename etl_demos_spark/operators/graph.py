@@ -32,7 +32,6 @@ their out-degrees and reused; the per-round shuffle moves only the
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -56,16 +55,12 @@ _Q = 1e12
 # integer-quantized doubles — see the module docstring), so the numpy
 # replay is BIT-IDENTICAL to the distributed rounds; both paths are
 # pinned against each other in tests/test_graph.py. Above the cap the
-# distributed path runs unchanged. Env-overridable per deployment.
+# distributed path runs unchanged.
 GRAPH_SINGLE_TASK_EDGE_CAP = 5_000_000
 
 
 def _single_task_cap(override: int | None) -> int:
-    if override is not None:
-        return override
-    return int(
-        os.environ.get("ETL_GRAPH_SINGLE_TASK_EDGE_CAP", GRAPH_SINGLE_TASK_EDGE_CAP)
-    )
+    return GRAPH_SINGLE_TASK_EDGE_CAP if override is None else override
 
 
 def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -322,7 +317,8 @@ def flatten_hierarchy(
         # null parents are coalesced to the node's own id JVM-SIDE so
         # the column crossing Arrow is never nullable — a nullable long
         # materializes as float64 in pandas and silently rounds ids
-        # ≥ 2^53 (the exact-int64 Arrow discipline, see _arrow_exact_id)
+        # ≥ 2^53 (Arrow batches keep int64 plus a validity bitmap; see
+        # dedup._reduce_id_runs for the mapInArrow form)
         slim = nodes.select(
             F.col(id_col).alias("node"),
             F.coalesce(F.col(parent_col), F.col(id_col)).alias("parent"),

@@ -3,6 +3,9 @@ approximate paths against the exact n-gram Jaccard ground truth."""
 
 from __future__ import annotations
 
+from datetime import date
+from decimal import Decimal
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -642,32 +645,73 @@ def _sigs(df):
     }
 
 
-@pytest.mark.parametrize("kind", ["minhash", "simhash"])
-def test_arrow_signatures_handle_null_grams_and_null_ids(spark, kind):
-    """The Arrow signature reduces must (a) ignore null grams like the
-    codegen aggregates do instead of crashing on NaN→int64, (b) keep a
-    null-id group (pandas dropna would silently drop it), (c) keep ids
-    ≥ 2^53 EXACT even when the same batch holds a null id (pandas
-    materializes a nullable int64 column as float64 — the id
-    round-trips through string to survive), and (d) agree with codegen
-    on a doc whose every gram is null: NO signature row from either
-    implementation."""
-    big = (1 << 53) + 1  # not representable in float64
-    docs = spark.createDataFrame(
-        [(1, ["aa", None, "bb"]), (None, ["aa"]), (None, ["cc"]),
-         (2, ["aa"]), (big, ["aa"]), (7, [None])],
-        "id long, sh array<string>",
-    )
+def _signature_pair(docs, kind):
+    """(shipped, codegen reference) signatures of (id, sh) docs."""
     grams = docs.select("id", F.explode_outer("sh").alias("g"))
     base = _md5_base(grams, kind)
     if kind == "minhash":
-        got = _sigs(dedup.minhash_signatures_from_grams(grams, "id", "g", 16))
-        ref = _sigs(dedup._minhash_codegen(base, 16))
+        got = dedup.minhash_signatures_from_grams(grams, "id", "g", 16)
+        ref = dedup._minhash_codegen(base, 16)
     else:
-        got = _sigs(dedup.simhash_signatures(docs, "id", "sh"))
-        ref = _sigs(dedup._simhash_codegen(base, dedup.SIMHASH_BITS))
-    # id 7 (all-null grams) absent from BOTH; big id survives exactly
-    assert set(got) == {1, 2, big, None}
+        got = dedup.simhash_signatures(docs, "id", "sh")
+        ref = dedup._simhash_codegen(base, dedup.SIMHASH_BITS)
+    return _sigs(got), _sigs(ref)
+
+
+_BIG = (1 << 53) + 1  # not representable in float64
+
+# id type → (ids 1, 2, an extreme value, 7): the Arrow reduce keeps each
+# type end to end; the struct id must take the codegen path
+_ID_TYPES = {
+    "bigint": ("bigint", (1, 2, _BIG, 7)),
+    "int": ("int", (1, 2, (1 << 31) - 1, 7)),
+    "string": ("string", ("1", "2", str(_BIG), "7")),
+    "decimal": ("decimal(20,0)", (Decimal(1), Decimal(2), Decimal((1 << 64) + 1), Decimal(7))),
+    "date": ("date", (date(2020, 1, 1), date(2020, 1, 2), date(9999, 12, 31), date(1970, 1, 1))),
+    "struct": ("struct<k:bigint>", ((1,), (2,), (_BIG,), (7,))),
+}
+
+
+@pytest.mark.parametrize("id_name", list(_ID_TYPES))
+@pytest.mark.parametrize("kind", ["minhash", "simhash"])
+def test_arrow_signatures_handle_null_grams_and_null_ids(spark, kind, id_name):
+    """The Arrow signature reduce must (a) ignore null grams like the
+    codegen aggregates do, (b) keep the null-id group as ONE signature,
+    (c) hand every id back exactly in its own type — int64 ids ≥ 2^53
+    next to a null id in the same batch, decimals beyond int64, dates —
+    and (d) agree with codegen on a doc whose every gram is null: NO
+    signature row from either implementation. Ids Arrow cannot group
+    like Spark (a struct here) take the codegen path."""
+    id_type, (one, two, big, seven) = _ID_TYPES[id_name]
+    docs = spark.createDataFrame(
+        [(one, ["aa", None, "bb"]), (None, ["aa"]), (None, ["cc"]),
+         (two, ["aa"]), (big, ["aa"]), (seven, [None])],
+        f"id {id_type}, sh array<string>",
+    )
+    assert dedup._arrow_groups_ids(docs) == (id_name != "struct")
+    got, ref = _signature_pair(docs, kind)
+    # id 7 (all-null grams) absent from BOTH; the extreme id survives
+    assert set(got) == {one, two, big, None}
+    assert got == ref
+
+
+@pytest.mark.parametrize("kind", ["minhash", "simhash"])
+def test_arrow_signature_runs_straddle_batches(spark, kind):
+    """With 4-row Arrow batches every id run of 5+ grams — the null-id
+    group included — straddles batch boundaries, so the carried run
+    must merge into the next batch's first run (and be flushed when the
+    next batch starts a new id). Signatures must still equal codegen."""
+    rows = [(i, [f"g{i}_{j}" for j in range(i % 11 + 1)]) for i in range(40)]
+    rows += [(None, [f"n{j}" for j in range(9)]), (_BIG, [f"b{j}" for j in range(6)])]
+    docs = spark.createDataFrame(rows, "id long, sh array<string>")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        got, ref = _signature_pair(docs, kind)
+    finally:
+        spark.conf.set(key, old)
+    assert len(got) == 42 and None in got and _BIG in got
     assert got == ref
 
 
@@ -676,9 +720,8 @@ def test_doc_signatures_bit_identical_to_codegen(spark):
     BIT-IDENTICAL to the codegen groupBy reference over the same grams
     on every contract corner: normal docs, sub-n docs (degenerate whole
     gram), empty text, null text (per-id sentinel), null id + null
-    text, null id + text (one merged group), ids ≥ 2^53 (string
-    round-trip) and duplicate texts, under both ``short_docs``
-    modes."""
+    text, null id + text (one merged group), ids ≥ 2^53 and duplicate
+    texts, under both ``short_docs`` modes."""
     big = (1 << 53) + 1
     rows = [
         (1, "the quick brown fox jumps over the lazy dog"),
