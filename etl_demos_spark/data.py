@@ -65,45 +65,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for spark.sql() use."""
     for name, df in load_tables(spark, sf_dir).items():
         df.createOrReplaceTempView(name)
-
-
-def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Scale-safe parallelism floor for EXPLODE-AMPLIFIED passes.
-
-    A gram/shingle/n-gram pass multiplies its input ~50-100× before the
-    first shuffle, so its parallelism is pinned to the SCAN's partition
-    count — and a small single-row-group parquet file scans as ONE
-    partition, serializing the heaviest stage of the query onto one
-    core no matter how wide the cluster is (the classic
-    small-input/heavy-derivation trap).
-
-    Round-robin repartition to the session's default parallelism, but
-    ONLY when the scan is narrower than that: on a real multi-split
-    100 TB read (partitions ≫ cores) this is a no-op — it must never
-    coalesce or add a shuffle to an already-parallel scan. The added
-    shuffle moves the PRE-explosion bytes (the small side of the
-    amplification), which is exactly the cheap place to pay for
-    balance.
-
-    HISTORY — currently unused by the built-in operators, kept for
-    callers with genuinely huge single-split inputs. Round 4 first
-    applied it to the single-consumer gram passes (minhash/simhash
-    signatures, DSIR features, LM n-grams) based on cold-session
-    measurements claiming 25-60% gains, then REMOVED it after
-    interleaved same-session A/Bs showed those gains were session
-    noise: floored vs unfloored medians at sf0.1 were lm_quality
-    2.4 vs 1.6, dsir_select 4.1-6.0 vs 3.6-4.7, dedup_minhash a wash —
-    the repartition shuffle of full text bodies costs as much as the
-    parallelism it buys even on a 1-partition scan of 5k docs, and on
-    any real multi-split corpus the floor is a no-op by construction.
-    (Flooring SHARED multi-branch passes was always a loss: each
-    branch re-executes the exchange — q_text_search 0.7→1.8 s,
-    q_ppmi 1.5→2.1 s.) Lesson recorded: A/B perf claims must be
-    interleaved in one session; cold-session drift is ~2×, larger
-    than most effect sizes.
-    """
-    if min_parts is None:
-        min_parts = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < min_parts:
-        return df.repartition(min_parts)
-    return df

@@ -700,7 +700,8 @@ def minhash_lsh_pairs(
     # No parallelism floor on the pre-explosion side: interleaved A/B at
     # sf0.1 showed the repartition shuffle of full text bodies costs as
     # much as it buys even on a single-row-group scan, and on any real
-    # multi-split corpus the floor is a no-op anyway (see data.py).
+    # multi-split corpus the floor is a no-op anyway (PERF.md, "The
+    # parallelism-floor correction").
     # short_docs="whole": sub-n-token docs carry a degenerate whole-text
     # gram so identical short texts pair and the incremental kept-set
     # contract covers every input row (see exploded_shingles).

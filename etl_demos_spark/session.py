@@ -12,13 +12,26 @@ Scale notes (100 TB design envelope):
 - ``nanosAsLong``: the driver testdata's events table stores TIMESTAMP(NANOS)
   which Spark's vectorized Parquet reader rejects; reading nanos as long and
   converting explicitly keeps the scan vectorized (see data.load_events).
+- Sessions built by ``get_spark`` own their Python worker daemon
+  (``etl_demos_spark.pydaemon``): it stops every Python task re-reading
+  the directories of ``pyspark.zip``, py4j's zip and the Spark jar —
+  150-250 ms per task before CPython 3.13, the bulk of what looked like
+  Python/Arrow boundary cost (PERF.md, "the per-task zip re-read"). On
+  CPython >= 3.13, whose zip importers invalidate lazily, it installs
+  nothing and runs the stock daemon. The daemon module is a static conf,
+  so a session handed in by a harness (``configure_runtime``) keeps
+  Spark's.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+# Where the workers import etl_demos_spark (and so the daemon) from.
+_PACKAGE_PARENT = str(Path(__file__).resolve().parent.parent)
 
 # Runtime-settable confs applied to ANY session (including one handed to us
 # by an external harness). Keep strictly to confs Spark allows at runtime.
@@ -40,10 +53,12 @@ RUNTIME_CONFS: dict[str, str] = {
     # real scale partitions hit the advisory size anyway and this flag is
     # moot; it only changes behavior where partitions are tiny.
     "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-    # Whole-stage codegen bails out above 100 fields by default; the MinHash
-    # signature aggregate carries 128 min-buffers (operators/dedup.py) and
-    # fell back to interpreted evaluation (measured ~25% slower). Any wide
-    # agg/projection under 256 fields now stays codegen'd.
+    # Whole-stage codegen bails out above 100 fields by default. The
+    # MinHash signatures are an Arrow reducer now; only its codegen form
+    # (dedup._minhash_codegen: the fallback for ids Arrow cannot group, and
+    # the tests' reference) carries 128 min-buffers, which fell back to
+    # interpreted evaluation (measured ~25% slower). Any wide
+    # agg/projection under 256 fields stays codegen'd.
     "spark.sql.codegen.maxFields": "256",
 }
 
@@ -100,20 +115,22 @@ def get_spark(
         .config("spark.ui.retainedTasks", "2000")
         # Periodic full GC: 10min default. The round-4 value (2min) was
         # marathon-test OOM protection, but a measured interleaved
-        # A-B-A-B (tools/ab_periodic_gc.py, PERF.md round 5) showed it
-        # taxes a bench-length session ~6% — System.gc() pauses land
-        # inside whichever query is running. 10min still bounds cleaner
-        # state on multi-hour sessions; the pytest conftest opts back
-        # into 2min for the 25-minute marathon suite where the OOM risk
-        # lives. Override per-process via SPARK_GRAFT_PERIODIC_GC.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "10min"),
-        )
+        # A-B-A-B (PERF.md, "Round-5: attribution of the r04 +13%
+        # shared-set bench drift") showed it taxes a bench-length session
+        # ~6% — System.gc() pauses land inside whichever query is
+        # running. 10min still bounds cleaner state on multi-hour
+        # sessions; the pytest conftest opts back into 2min via
+        # extra_confs for the marathon suite where the OOM risk lives.
+        .config("spark.cleaner.periodicGC.interval", "10min")
+        .config("spark.python.daemon.module", "etl_demos_spark.pydaemon")
     )
-    for k, v in RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    for k, v in (extra_confs or {}).items():
+    confs = {**RUNTIME_CONFS, **(extra_confs or {})}
+    # the workers must import the daemon even when the driver runs outside
+    # the checkout with no PYTHONPATH
+    confs["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        filter(None, (_PACKAGE_PARENT, confs.get("spark.executorEnv.PYTHONPATH")))
+    )
+    for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # If getOrCreate returned a pre-existing session, still enforce runtime confs.
